@@ -6,8 +6,10 @@ Models the agent's source machinery (SURVEY §2.1) as a first-class Spark
 source instead of a generic file stream:
 
 - S1 directory watcher: ``latestOffset`` lists the segment directory.
-- S2 segment replay: each micro-batch gets one InputPartition per NEW
-  segment; ``read`` replays that segment's mutations.
+- S2 segment replay: each micro-batch packs its NEW segments, in
+  ascending order, into contiguous runs of at most a per-batch split size
+  (see "Scale:"; a larger segment gets a run to itself); each run is one
+  InputPartition and ``read`` replays its segments in order.
 - S3/O3 offset resume: the offset is the count of segments consumed in
   ascending segment order — JSON-serializable, checkpoint-managed by
   Structured Streaming (the reference's ``<segment>_offset.dat`` files).
@@ -34,9 +36,20 @@ Segments are parquet files named ``segment-<id>.parquet`` (append-only,
 ids ascending — the commitlog contract). ``write_segments`` produces them
 from any mutation-event DataFrame.
 
-Scale: one InputPartition per segment ⇒ segment replay parallelism equals
-new-segment count (the reference got one task per segment too,
-CommitLogReaderService.java:198-212). ``read`` yields
+Scale: the reference replays one task per segment
+(CommitLogReaderService.java:198-212), which is cheap in a JVM. A Python
+DataSource task is not: on a 4-core VM under PySpark 4.1 each one costs
+about 250–300 ms of worker CPU (``setup_spark_files`` re-scanning
+pyspark.zip) against 3–4 ms of ``read`` for a 200-row segment. So a
+batch's segments are packed by parquet file bytes with Spark's file-source
+split rule: split = min(MAX_PARTITION_BYTES, max(MIN_PARTITION_BYTES,
+batch bytes / cores)), i.e. 128 MB, 4 MB and ``os.cpu_count()``. A batch
+of at most 4 MB is one task — the measured case: the perfbench workloads'
+segments and batches are well under that floor. A larger batch is cut
+into 4 MB runs up to cores × 4 MB and into about one run per core above
+that, so a large backlog still reads on every core. Traffic with large
+segments (tens of MB each) has not been measured. A batch with no new
+segments plans no partition and starts no task. ``read`` yields
 ``pyarrow.RecordBatch`` objects — the scan stays Arrow-vectorized across
 the Python↔JVM boundary instead of materializing per-row tuples. The
 batch reader exposes the SAME directory for backfill — one source, two
@@ -122,14 +135,51 @@ def _list_segments(path: str) -> list[str]:
     return sorted(glob.glob(os.path.join(path, "segment-*.parquet")))
 
 
-class _SegmentPartition(InputPartition):
-    def __init__(self, file: str):
-        self.file = file
+#: upper bound on parquet segment bytes per read partition — Spark's
+#: default ``spark.sql.files.maxPartitionBytes``
+MAX_PARTITION_BYTES = 128 * 1024 * 1024
+#: lower bound on the split size — Spark's default
+#: ``spark.sql.files.openCostInBytes``
+MIN_PARTITION_BYTES = 4 * 1024 * 1024
 
 
-def _read_segment(file: str, schema: T.StructType):
+class _SegmentRun(InputPartition):
+    """Contiguous segments, ascending, replayed by one read task."""
+
+    def __init__(self, files: list[str]):
+        self.files = files
+
+
+def _pack_segments(files: list[str]) -> list[_SegmentRun]:
+    """Cut the ascending segment list into contiguous runs of at most
+    ``split`` bytes; a segment larger than the split is its own run.
+
+    ``split`` follows Spark's file-source rule (FilePartition
+    .maxSplitBytes): min(MAX_PARTITION_BYTES, max(MIN_PARTITION_BYTES,
+    batch bytes / cores)). A small burst fits under the floor and is one
+    task; a large backlog is spread over the cores."""
+    sizes = [os.path.getsize(f) for f in files]
+    split = min(
+        MAX_PARTITION_BYTES,
+        max(MIN_PARTITION_BYTES, sum(sizes) // (os.cpu_count() or 1)),
+    )
+    runs: list[_SegmentRun] = []
+    run: list[str] = []
+    size = 0
+    for f, n in zip(files, sizes):
+        if run and size + n > split:
+            runs.append(_SegmentRun(run))
+            run, size = [], 0
+        run.append(f)
+        size += n
+    if run:
+        runs.append(_SegmentRun(run))
+    return runs
+
+
+def _read_segments(run: _SegmentRun, schema: T.StructType):
     """Arrow-vectorized segment replay: RecordBatches cross the boundary
-    whole (no per-row Python tuples). The parquet file is cast to the
+    whole (no per-row Python tuples). Each parquet file is cast to the
     source's arrow schema so field order/width always match the plan.
 
     BACKWARD-compatible read (CassandraSource.java:666-698 rebuild-on-DDL
@@ -141,17 +191,18 @@ def _read_segment(file: str, schema: T.StructType):
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow_schema = to_arrow_schema(schema)
-    pf = pq.ParquetFile(file)
-    present = set(pf.schema_arrow.names)
     wanted = [f.name for f in schema.fields]
-    table = pq.read_table(file, columns=[c for c in wanted if c in present])
-    for field in arrow_schema:
-        if field.name not in present:
-            table = table.append_column(
-                field.name, pa.nulls(table.num_rows, type=field.type)
-            )
-    table = table.select(wanted).cast(arrow_schema)
-    yield from table.to_batches()
+    for file in run.files:
+        with pq.ParquetFile(file) as pf:
+            present = set(pf.schema_arrow.names)
+            table = pf.read(columns=[c for c in wanted if c in present])
+        for field in arrow_schema:
+            if field.name not in present:
+                table = table.append_column(
+                    field.name, pa.nulls(table.num_rows, type=field.type)
+                )
+        table = table.select(wanted).cast(arrow_schema)
+        yield from table.to_batches()
 
 
 class CommitLogStreamReader(DataSourceStreamReader):
@@ -171,15 +222,10 @@ class CommitLogStreamReader(DataSourceStreamReader):
         return {"n": len(_list_segments(self.path))}
 
     def partitions(self, start: dict, end: dict):
-        files = _list_segments(self.path)[start["n"] : end["n"]]
-        return [_SegmentPartition(f) for f in files] or [
-            _SegmentPartition("")  # empty batch placeholder
-        ]
+        return _pack_segments(_list_segments(self.path)[start["n"] : end["n"]])
 
-    def read(self, partition: _SegmentPartition):
-        if not partition.file:
-            return iter(())
-        return _read_segment(partition.file, self.schema)
+    def read(self, partition: _SegmentRun):
+        return _read_segments(partition, self.schema)
 
     def commit(self, end: dict) -> None:
         # segments are immutable; nothing to GC here (the reference's
@@ -200,10 +246,13 @@ class CommitLogBatchReader(DataSourceReader):
             raise ValueError("cdc_commitlog requires option 'path'")
 
     def partitions(self):
-        return [_SegmentPartition(f) for f in _list_segments(self.path)]
+        return _pack_segments(_list_segments(self.path))
 
-    def read(self, partition: _SegmentPartition):
-        return _read_segment(partition.file, self.schema)
+    def read(self, partition: _SegmentRun | None):
+        # an empty directory plans no partition; Spark then calls read(None)
+        if partition is None:
+            return iter(())
+        return _read_segments(partition, self.schema)
 
 
 class CommitLogDataSource(DataSource):

@@ -11,7 +11,10 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
+from cdc_apache_cassandra_spark.sources import commitlog_source
 from cdc_apache_cassandra_spark.sources.commitlog_source import (
+    CommitLogBatchReader,
+    CommitLogStreamReader,
     register,
     write_segments,
 )
@@ -37,6 +40,90 @@ def test_batch_read_equals_generator(spark, seg_dir):
     assert Counter(map(tuple, got.select(*cols).collect())) == Counter(
         map(tuple, want.select(*cols).collect())
     )
+
+
+def test_batch_read_is_one_task_replaying_segments_in_order(spark, seg_dir):
+    """4 small segments pack into one read partition, replayed in
+    ascending segment order (file k holds the rows with segment % 4 == k)."""
+    df = spark.read.format("cdc_commitlog").option("path", seg_dir).load()
+    assert df.rdd.getNumPartitions() == 1
+    seg_ids = [r[0] for r in df.select(F.col("segment") % 4).collect()]
+    assert seg_ids == sorted(seg_ids)
+    assert set(seg_ids) == {0, 1, 2, 3}
+
+
+# --- read-partition packing (planning only: no Spark, no parquet) ----------
+
+
+def _fake_segments(d, sizes):
+    """Segment files of the given byte sizes, created in reverse id order
+    so the planner's ascending sort is what orders them."""
+    files = [
+        os.path.join(d, f"segment-{i:05d}.parquet") for i in range(len(sizes))
+    ]
+    for f, n in reversed(list(zip(files, sizes))):
+        with open(f, "wb") as fh:
+            fh.write(b"x" * n)
+    return files
+
+
+def _stream_reader(d):
+    return CommitLogStreamReader({"path": str(d)}, None)
+
+
+@pytest.mark.parametrize(
+    "sizes, bound, floor, start, end, want",
+    [
+        # several small segments: one partition, ascending
+        ([100] * 5, None, None, 0, 5, [[0, 1, 2, 3, 4]]),
+        # a run may fill the bound exactly, never exceed it
+        ([100] * 5, 200, None, 0, 5, [[0, 1], [2, 3], [4]]),
+        # a segment larger than the bound is a run of its own
+        ([50, 50, 500, 50, 50], 200, None, 0, 5, [[0, 1], [2], [3, 4]]),
+        # batch / cores (200) above the floor: one run per core
+        ([100] * 8, None, 100, 0, 8, [[0, 1], [2, 3], [4, 5], [6, 7]]),
+        # the floor (300) above batch / cores: fewer, fuller runs
+        ([100] * 8, None, 300, 0, 8, [[0, 1, 2], [3, 4, 5], [6, 7]]),
+        # offsets {"n":2}..{"n":5} cover exactly segments 2-4
+        ([100] * 6, None, None, 2, 5, [[2, 3, 4]]),
+        # no new segments: no partition, so no Python read task
+        ([100] * 3, None, None, 3, 3, []),
+    ],
+    ids=[
+        "small",
+        "split_at_bound",
+        "oversize",
+        "per_core",
+        "floor",
+        "offset_range",
+        "empty",
+    ],
+)
+def test_partitions_pack_contiguous_runs(
+    tmp_path, monkeypatch, sizes, bound, floor, start, end, want
+):
+    """Split = min(bound, max(floor, batch bytes / cores)), cores = 4."""
+    if bound is not None:
+        monkeypatch.setattr(commitlog_source, "MAX_PARTITION_BYTES", bound)
+    if floor is not None:
+        monkeypatch.setattr(commitlog_source, "MIN_PARTITION_BYTES", floor)
+    monkeypatch.setattr(commitlog_source.os, "cpu_count", lambda: 4)
+    f = _fake_segments(tmp_path, sizes)
+    parts = _stream_reader(tmp_path).partitions({"n": start}, {"n": end})
+    assert [p.files for p in parts] == [[f[i] for i in run] for run in want]
+
+
+def test_batch_reader_packs_like_stream_reader(tmp_path):
+    files = _fake_segments(tmp_path, [100] * 5)
+    batch = CommitLogBatchReader({"path": str(tmp_path)}, None)
+    assert [p.files for p in batch.partitions()] == [files]
+
+
+def test_batch_read_of_empty_directory_is_empty(spark, tmp_path):
+    """No segments plans no partition; Spark then hands read() a None."""
+    register(spark)
+    df = spark.read.format("cdc_commitlog").option("path", str(tmp_path)).load()
+    assert df.count() == 0
 
 
 def test_stream_read_equals_batch(spark, seg_dir):
